@@ -42,7 +42,10 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # shared input-spreading helper (functions/partitioning.py — also used
 # by ann_ops and the jsonld_ops document kernels)
-from jsonld_ex_spark.functions.partitioning import spread_input as _spread  # noqa: E402
+from jsonld_ex_spark.functions.partitioning import (  # noqa: E402
+    capped_shuffle,
+    spread_input as _spread,
+)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,84 +346,66 @@ def _connected_components(
     fault-tolerant production runs swap in reliable checkpointing via
     sparkContext.setCheckpointDir — same plan shape.)
 
-    The shuffle width is capped to core count for the supersteps:
-    localCheckpointed DataFrames report UnknownPartitioning, so every
-    superstep join/agg would otherwise re-shuffle at the session's
-    full width (hundreds of near-empty tasks per iteration at the
-    bench's 128 partitions) — the same sizing rule as
-    graph_paths._walk_fixed and property_paths.eval_path; the conf is
-    restored before returning."""
-    spark = labels.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    cap = str(min(int(prev), max(spark.sparkContext.defaultParallelism, 2)))
-    spark.conf.set("spark.sql.shuffle.partitions", cap)
-    try:
-        return _cc_supersteps(labels, edges, max_iters)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _cc_supersteps(
-    labels: DataFrame, edges: DataFrame, max_iters: int
-) -> tuple[DataFrame, int]:
-    edges = edges.repartition("dst").cache()
-    labels = labels.localCheckpoint(eager=True)
-    changed = -1
-    used = 0
-    for it in range(max_iters):
-        used = it + 1
-        neighbor_min = (
-            edges.join(labels, edges["src"] == labels["doc_id"])
-            .groupBy("dst")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        cand = labels.join(
-            neighbor_min, labels["doc_id"] == neighbor_min["dst"], "left"
-        ).select(
-            "doc_id",
-            F.least(F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))).alias(
-                "cluster_id"
-            ),
-        )
-        # pointer doubling: follow the label chain one extra hop
-        # (label(label) ≤ label since labels only decrease) — this is
-        # what makes long chains converge in O(log diameter)
-        parent = cand.select(
-            F.col("doc_id").alias("p_doc"), F.col("cluster_id").alias("p_lbl")
-        )
-        new_labels = (
-            cand.join(parent, cand["cluster_id"] == parent["p_doc"], "left")
-            .select(
+    The supersteps run under partitioning.capped_shuffle."""
+    with capped_shuffle(labels.sparkSession):
+        edges = edges.repartition("dst").cache()
+        labels = labels.localCheckpoint(eager=True)
+        changed = -1
+        used = 0
+        for it in range(max_iters):
+            used = it + 1
+            neighbor_min = (
+                edges.join(labels, edges["src"] == labels["doc_id"])
+                .groupBy("dst")
+                .agg(F.min("cluster_id").alias("nbr_min"))
+            )
+            cand = labels.join(
+                neighbor_min, labels["doc_id"] == neighbor_min["dst"], "left"
+            ).select(
                 "doc_id",
-                F.least(F.col("cluster_id"), F.coalesce("p_lbl", F.col("cluster_id"))).alias(
+                F.least(F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))).alias(
                     "cluster_id"
                 ),
             )
-            .localCheckpoint(eager=True)
+            # pointer doubling: follow the label chain one extra hop
+            # (label(label) ≤ label since labels only decrease) — this is
+            # what makes long chains converge in O(log diameter)
+            parent = cand.select(
+                F.col("doc_id").alias("p_doc"), F.col("cluster_id").alias("p_lbl")
+            )
+            new_labels = (
+                cand.join(parent, cand["cluster_id"] == parent["p_doc"], "left")
+                .select(
+                    "doc_id",
+                    F.least(F.col("cluster_id"), F.coalesce("p_lbl", F.col("cluster_id"))).alias(
+                        "cluster_id"
+                    ),
+                )
+                .localCheckpoint(eager=True)
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "doc_id")
+                .where(F.col("n.cluster_id") < F.col("o.cluster_id"))
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                break
+        edges.unpersist()
+        if changed != 0:
+            raise RuntimeError(
+                f"connected components did not converge in {max_iters} supersteps "
+                f"({changed} labels still changing) — raise max_iters"
+            )
+        return (
+            labels.select(
+                "doc_id",
+                "cluster_id",
+                (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
+            ),
+            used,
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.cluster_id") < F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"connected components did not converge in {max_iters} supersteps "
-            f"({changed} labels still changing) — raise max_iters"
-        )
-    return (
-        labels.select(
-            "doc_id",
-            "cluster_id",
-            (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-        ),
-        used,
-    )
 
 
 SUBSTR_K = 6          # token-gram width for the diagonal chaining

@@ -35,6 +35,7 @@ from jsonld_ex_spark.core.errors import JsonLdError
 from jsonld_ex_spark.core.expansion import expand as expand_algo
 from jsonld_ex_spark.core.flattening import BlankNodeGenerator, node_map
 from jsonld_ex_spark.core.to_rdf import to_rdf_from_node_map
+from jsonld_ex_spark.functions.partitioning import session_memo, spread_input
 
 QUARANTINE_PRED = "https://sparkld.dev/system#processingError"
 
@@ -322,8 +323,6 @@ def jsonld_doc_triples(spark, sf_dir: str) -> DataFrame:
 
     # spread the single-split test file before the per-document Python
     # kernel (partitioning.spread_input: no-op on a properly-split table)
-    from jsonld_ex_spark.functions.partitioning import spread_input
-
     d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
     ctx_lit = json.dumps(_DOC_CTX)
     # assemble {"@context":..., "@id":"<ns><id>", "name":..., "chars":...}
@@ -375,8 +374,6 @@ def jsonld_frame_select(spark, sf_dir: str) -> DataFrame:
 
     # spread the single-split test file before the per-document Python
     # kernel (partitioning.spread_input: no-op on a properly-split table)
-    from jsonld_ex_spark.functions.partitioning import spread_input
-
     d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
     ctx_lit = json.dumps({"@vocab": VOCAB})
     docs = d.select(
@@ -463,8 +460,6 @@ def jsonld_canonical_hashes(spark, sf_dir: str) -> DataFrame:
 
     # spread the single-split test file before the per-document Python
     # kernel (partitioning.spread_input: no-op on a properly-split table)
-    from jsonld_ex_spark.functions.partitioning import spread_input
-
     d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
     ctx_lit = json.dumps({"@vocab": VOCAB})
     docs = d.select(
@@ -538,39 +533,32 @@ def _named_graph_triples(spark, sf_dir: str) -> DataFrame:
     stage."""
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _NAMED_GRAPH_MEMO.get(key)
-    if got is not None:
-        return got
-    # spread the single-split test file before the per-document Python
-    # kernel (partitioning.spread_input: no-op on a properly-split table)
-    from jsonld_ex_spark.functions.partitioning import spread_input
+    def build() -> DataFrame:
+        # spread the single-split test file before the per-document Python
+        # kernel (partitioning.spread_input: no-op on a properly-split table)
+        d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
+        ctx_lit = json.dumps(_DOC_CTX)
+        docs = d.select(
+            "doc_id",
+            F.concat(
+                F.lit('{"@context": ' + ctx_lit + ', "@id": "' + GRAPH_NS),
+                (F.col("doc_id") % 10).cast("string"),
+                F.lit('", "@graph": ['),
+                F.to_json(
+                    F.struct(
+                        F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
+                        F.col("text").alias("name"),
+                        F.col("n_chars").cast("long").alias("chars"),
+                    )
+                ),
+                F.lit("]}"),
+            ).alias("doc"),
+        )
+        return to_rdf_rows(docs, json_col="doc", doc_id_col="doc_id").drop(
+            "doc_id"
+        ).localCheckpoint(eager=True)
 
-    d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
-    ctx_lit = json.dumps(_DOC_CTX)
-    docs = d.select(
-        "doc_id",
-        F.concat(
-            F.lit('{"@context": ' + ctx_lit + ', "@id": "' + GRAPH_NS),
-            (F.col("doc_id") % 10).cast("string"),
-            F.lit('", "@graph": ['),
-            F.to_json(
-                F.struct(
-                    F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
-                    F.col("text").alias("name"),
-                    F.col("n_chars").cast("long").alias("chars"),
-                )
-            ),
-            F.lit("]}"),
-        ).alias("doc"),
-    )
-    out = to_rdf_rows(docs, json_col="doc", doc_id_col="doc_id").drop(
-        "doc_id"
-    ).localCheckpoint(eager=True)
-    for k in [k for k in _NAMED_GRAPH_MEMO if k[0] != key[0]]:
-        del _NAMED_GRAPH_MEMO[k]
-    _NAMED_GRAPH_MEMO[key] = out
-    return out
+    return session_memo(_NAMED_GRAPH_MEMO, spark, sf_dir, build)
 
 
 def kg_bgp_graph_doc_chars(spark, sf_dir: str) -> DataFrame:
@@ -690,49 +678,42 @@ def _lang_doc_triples(spark, sf_dir: str) -> DataFrame:
     _named_graph_triples."""
     from pyspark.sql import functions as F
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _LANG_DOC_MEMO.get(key)
-    if got is not None:
-        return got
-    # spread the single-split test file before the per-document Python
-    # kernel (partitioning.spread_input: no-op on a properly-split table)
-    from jsonld_ex_spark.functions.partitioning import spread_input
-
-    d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
-    ctx_lit = json.dumps(_LANG_DOC_CTX)
-    mod3 = F.col("doc_id") % 3
-    docs = d.select(
-        "doc_id",
-        F.concat(
-            F.lit('{"@context": ' + ctx_lit + ', '),
-            F.regexp_replace(
-                F.to_json(
-                    F.struct(
-                        F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
+    def build() -> DataFrame:
+        # spread the single-split test file before the per-document Python
+        # kernel (partitioning.spread_input: no-op on a properly-split table)
+        d = spread_input(spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
+        ctx_lit = json.dumps(_LANG_DOC_CTX)
+        mod3 = F.col("doc_id") % 3
+        docs = d.select(
+            "doc_id",
+            F.concat(
+                F.lit('{"@context": ' + ctx_lit + ', '),
+                F.regexp_replace(
+                    F.to_json(
                         F.struct(
-                            F.col("text").alias("@value"),
-                            F.when(mod3 == 0, F.lit("en"))
-                            .when(mod3 == 1, F.lit("fr"))
-                            .alias("@language"),
-                        ).alias("name"),
-                        F.col("n_chars").cast("long").alias("chars"),
-                        F.when(
-                            F.col("doc_id") % 4 == 0,
-                            (F.col("doc_id") % 5).cast("string"),
-                        ).alias("rating"),
-                    )
+                            F.concat(F.lit(DOC_NS), F.col("doc_id").cast("string")).alias("@id"),
+                            F.struct(
+                                F.col("text").alias("@value"),
+                                F.when(mod3 == 0, F.lit("en"))
+                                .when(mod3 == 1, F.lit("fr"))
+                                .alias("@language"),
+                            ).alias("name"),
+                            F.col("n_chars").cast("long").alias("chars"),
+                            F.when(
+                                F.col("doc_id") % 4 == 0,
+                                (F.col("doc_id") % 5).cast("string"),
+                            ).alias("rating"),
+                        )
+                    ),
+                    r"^\{", "",
                 ),
-                r"^\{", "",
-            ),
-        ).alias("doc"),
-    )
-    out = to_rdf_rows(docs, json_col="doc", doc_id_col="doc_id").drop(
-        "doc_id"
-    ).localCheckpoint(eager=True)
-    for k in [k for k in _LANG_DOC_MEMO if k[0] != key[0]]:
-        del _LANG_DOC_MEMO[k]
-    _LANG_DOC_MEMO[key] = out
-    return out
+            ).alias("doc"),
+        )
+        return to_rdf_rows(docs, json_col="doc", doc_id_col="doc_id").drop(
+            "doc_id"
+        ).localCheckpoint(eager=True)
+
+    return session_memo(_LANG_DOC_MEMO, spark, sf_dir, build)
 
 
 def kg_bgp_expr_doc_labels(spark, sf_dir: str) -> DataFrame:

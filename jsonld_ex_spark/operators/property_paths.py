@@ -35,11 +35,9 @@ supersteps, NOT one-hop-per-round), with per-round set-dedup as the
 map-side-combinable aggregate and a count-fixpoint stop, so cyclic
 graphs terminate (the rdf:list pointer-doubling walker would raise on
 a cycle; reachability is well-defined on one).  Like graph_paths, the
-whole evaluation materializes under a temporarily capped
-spark.sql.shuffle.partitions — closure inputs (one predicate's edge
-set) are small relative to the triple table, and a localCheckpointed
-DataFrame reports UnknownPartitioning, so without the cap every
-superstep join/dedup re-shuffles at the session's full width.
+whole evaluation materializes under partitioning.capped_shuffle —
+closure inputs (one predicate's edge set) are small relative to the
+triple table.
 
 The DuckDB oracle mirror (:func:`path_oracle_sql`) compiles the same
 AST to plain SQL, with ``WITH RECURSIVE`` (UNION = set semantics)
@@ -51,6 +49,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from jsonld_ex_spark.functions.partitioning import capped_shuffle
 
 _COMBINATORS = ("inv", "seq", "alt", "plus", "star", "opt", "neg")
 
@@ -321,19 +321,13 @@ def eval_path(
     the oracle keeps the direct form — agreement proves the rewrite."""
     _check(path)
     path = _rewrite(path)
-    spark = triples.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    cap = str(min(int(prev), max(spark.sparkContext.defaultParallelism, 2)))
-    spark.conf.set("spark.sql.shuffle.partitions", cap)
-    try:
+    with capped_shuffle(triples.sparkSession):
         # closures are eager (fixpoint counts), so the capped conf is
         # active for every superstep; the final relation materializes
         # here too so the caller's plan just scans it
         return _eval(
             triples, path, max_iters, allow_full_closure
         ).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def source_table_fingerprint(table_dir: str) -> str:

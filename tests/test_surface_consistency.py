@@ -53,3 +53,23 @@ def test_sf01_sweep_file_covers_every_query():
         if ":" in ln
     }
     assert q <= lines, f"queries missing from sf0.1 sweep: {sorted(q - lines)}"
+
+
+def _package_sources():
+    import pathlib
+
+    for path in sorted(pathlib.Path("jsonld_ex_spark").rglob("*.py")):
+        yield path.as_posix(), path.read_text(encoding="utf-8")
+
+
+def test_session_level_conf_and_memo_keys_live_in_one_module():
+    """Every shuffle-width write goes through partitioning.capped_shuffle
+    and every applicationId read through partitioning.session_memo, so
+    the cap rule and the memo lifecycle cannot drift per call site."""
+    home = "jsonld_ex_spark/functions/partitioning.py"
+    conf_set = re.compile(r"conf\.set\(\s*[\"']spark\.sql\.shuffle\.partitions")
+    app_id = re.compile(r"\.applicationId\b")
+    sets = [p for p, src in _package_sources() if conf_set.search(src)]
+    reads = [p for p, src in _package_sources() if app_id.search(src)]
+    assert sets == [home], f"shuffle.partitions set outside {home}: {sets}"
+    assert reads == [home], f"applicationId read outside {home}: {reads}"
